@@ -190,8 +190,8 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.ui.enabled", "false")
     // shared library session posture (AQE, cached-plan re-partitioning,
-    // UTC) — one list, owned by graft.core.SessionTune, so a user
-    // session gets the same plan shapes the bench measures
+    // UTC, codegen cache size) — one list, owned by graft.core.SessionTune,
+    // so a user session gets the same plan shapes the bench measures
     graft.core.SessionTune.defaults.foreach {
       case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()

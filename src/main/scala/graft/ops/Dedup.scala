@@ -102,25 +102,27 @@ object Dedup {
     *
     * Spelling: a map-side-combined df aggregate keeps only the
     * OVER-CAP shingles (a blacklist bounded by |sh| / maxDf rows —
-    * they need > maxDf occurrences each), broadcast anti-joined back
-    * onto the rows. The r17 window spelling (`count(*) over
-    * (partition by g)`) shuffled EVERY index row by `g` and buffered
-    * each shingle's full row set in one window partition before the
-    * filter could drop it — a stop-word shingle at corpus scale makes
-    * one giant spilling task (guide §2.5: windows have no AQE skew
-    * split). Here the hot shingle collapses to one row in the partial
-    * aggregate before the exchange, nothing corpus-sized shuffles by
-    * `g` at all, and the anti-join preserves the input's scan
-    * partitioning. The price is deriving `sh` twice (Spark has no
-    * common-subplan elimination): one extra corpus scan against a
-    * full shuffle + sort of the exploded index — strictly fewer bytes
-    * moved at any scale. */
+    * they need > maxDf occurrences each), anti-joined back onto the
+    * rows. The r17 window spelling (`count(*) over (partition by g)`)
+    * shuffled EVERY index row by `g` and buffered each shingle's full
+    * row set in one window partition before the filter could drop it
+    * — a stop-word shingle at corpus scale makes one giant spilling
+    * task (guide §2.5: windows have no AQE skew split). Here the hot
+    * shingle collapses to one row in the partial aggregate before the
+    * exchange. The join carries no broadcast hint, because the list
+    * grows with the corpus: while it is under the broadcast threshold
+    * the planner (or AQE, on its measured size) broadcasts it, nothing
+    * corpus-sized shuffles by `g` and the anti-join keeps the input's
+    * scan partitioning; past the threshold it becomes a shuffle join
+    * instead of a driver-memory failure. The price is deriving `sh`
+    * twice (Spark has no common-subplan elimination): one extra
+    * corpus scan against a full shuffle + sort of the exploded index. */
   def cappedIndex(sh: DataFrame, maxDf: Long): DataFrame = {
     val overCap = sh.groupBy(col("g"))
       .agg(count(lit(1)).as("__df"))
       .filter(col("__df") > maxDf)
       .select(col("g"))
-    sh.join(broadcast(overCap), Seq("g"), "left_anti")
+    sh.join(overCap, Seq("g"), "left_anti")
   }
 
   /** Exact n-gram Jaccard over candidate pairs from the inverted
@@ -523,8 +525,8 @@ object Dedup {
     * `bandBits` (fewer, wider bands — exact threshold drops to
     * nBands-1) or move to multi-band combination keys, trading the
     * exact guarantee for fan-out, exactly as the reference literature
-    * does. The same-pair-in-many-bands duplicates are removed by one
-    * distinct() on the verified output. */
+    * does. A pair that collides in several bands is emitted once,
+    * from its lowest matching band, so the output needs no distinct(). */
   def simhashPairsBanded(
       sh: DataFrame, maxHamming: Int, bandBits: Int = 6): DataFrame = {
     val nBands = (SimhashBits + bandBits - 1) / bandBits

@@ -533,16 +533,16 @@ object TrainingQueries extends graft.QueryModule {
     val oldSh0 = sh0.filter(pmod(col("id"), lit(5)) =!= 0)
     val newSh0 = sh0.filter(pmod(col("id"), lit(5)) === 0)
     // the over-cap list is consumed by BOTH sides' anti-joins:
-    // cache it (one derivation of the standing-shingle aggregate)
-    // and broadcast it so neither side shuffles by g — the hot list
-    // is bounded by |standing shingles| / 1000 rows by construction
+    // cache it (one derivation of the standing-shingle aggregate).
+    // It grows with the standing corpus (|standing shingles| / 1000
+    // rows), so the planner, not a hint, decides whether to broadcast
     val hot = oldSh0.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .filter(col("df") > 1000L).select("g").scopedCache()
     // each side feeds its signature build AND the verify join
     val oldSh = Dedup.shingleRowsWithCounts(
-      oldSh0.join(broadcast(hot), Seq("g"), "left_anti")).scopedCache()
+      oldSh0.join(hot, Seq("g"), "left_anti")).scopedCache()
     val newSh = Dedup.shingleRowsWithCounts(
-      newSh0.join(broadcast(hot), Seq("g"), "left_anti")).scopedCache()
+      newSh0.join(hot, Seq("g"), "left_anti")).scopedCache()
     val oldBands = Dedup.lshBands(
       Dedup.minhashSignatures(oldSh.select("id", "g"), 64), 64, 4)
     val newBands = Dedup.lshBands(

@@ -229,6 +229,33 @@ class DedupSpec extends SparkSpec {
     assert(banded(0).getLong(2) === 8L)
   }
 
+  test("over-cap shingle anti-joins carry no forced broadcast") {
+    // the over-cap lists grow with the corpus, so only the planner's
+    // size threshold may broadcast them; with the threshold off, a
+    // broadcast anti-join can only come from a hint
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.catalog.clearCache() // cached plans are planned only once
+    spark.conf.set(key, "-1")
+    try graft.core.CacheScope.withScope {
+      val docs = Tables.documents(spark, sf)
+      for ((name, df) <- Seq(
+          "Dedup.cappedIndex" ->
+            Dedup.cappedIndex(Dedup.wordShingles(docs, "text", "doc_id"), 2L),
+          "q_dedup_admit" -> graft.queries.TrainingQueries.qDedupAdmit(spark, sf))) {
+        df.collect()
+        val plan = df.queryExecution.executedPlan.toString
+        val forced = plan.split("\n")
+          .filter(l => l.contains("BroadcastHashJoin") && l.contains("LeftAnti"))
+        assert(forced.isEmpty, s"$name broadcasts an anti-join side:\n$plan")
+        assert(plan.contains("LeftAnti"), s"$name lost its anti-join:\n$plan")
+      }
+    } finally {
+      saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      spark.catalog.clearCache()
+    }
+  }
+
   test("tuneBands: optimum beats neighboring splits on the S-curve loss") {
     val k = 64
     val t = 0.5

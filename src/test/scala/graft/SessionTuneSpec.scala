@@ -4,20 +4,20 @@ import graft.core.SessionTune
 
 /** Pins the library-owned session posture: the defaults list carries
   * the cached-plan re-partitioning conf every snapshot entry's
-  * one-scan pre-aggregate depends on, and the batch shuffle-partition
+  * one-scan pre-aggregate depends on and the codegen cache size a
+  * repeated pass needs, and the batch shuffle-partition
   * count derives from input bytes (clamped, conf-overridable) — never
   * from the core count. */
 class SessionTuneSpec extends SparkSpec {
 
-  test("defaults carry the cached-plan AQE conf on a helper-built session") {
-    val b = org.apache.spark.sql.SparkSession.builder()
-    SessionTune.defaults.foreach { case (k, v) => b.config(k, v) }
-    // the shared test session already exists, so getOrCreate returns
-    // it; assert on the session after applying defaults directly
-    SessionTune.defaults.foreach { case (k, v) => spark.conf.set(k, v) }
-    assert(spark.conf.get(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+  test("defaults carry the AQE, cached-plan, UTC and codegen-cache confs") {
+    val d = SessionTune.defaults.toMap
+    assert(d("spark.sql.adaptive.enabled") === "true")
+    assert(d("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") === "true")
+    assert(d("spark.sql.session.timeZone") === "UTC")
+    // a repeated pass of the report + curation chains needs ~450
+    // generated classes resident; Spark's default (100) thrashes
+    assert(d("spark.sql.codegen.cache.maxEntries").toInt >= 1000)
   }
 
   test("scaledPartitions derives from bytes with a floor of 2") {

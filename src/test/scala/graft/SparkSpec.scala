@@ -1,18 +1,20 @@
 package graft
 
+import graft.core.SessionTune
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, forked by sbt). */
+/** Shared local SparkSession for all suites (one JVM, forked by sbt),
+  * built with the library's session posture as every runner builds
+  * it; the static confs in it only take effect here, at build time. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val b = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    SessionTune.defaults.foreach { case (k, v) => b.config(k, v) }
+    val s = b.config("spark.sql.shuffle.partitions", "4").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
